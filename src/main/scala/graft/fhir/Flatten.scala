@@ -151,31 +151,35 @@ object Flatten {
       1)
 
   /** The ADT patient-event feed (ref: 01_dbignite_sample.py:431-459):
-    * MessageHeader ⋈ Patient on bundleUUID, identifier extracts, event-code
-    * decode, latest-first ordering. */
-  def adtPatientEvents(bundles: DataFrame): DataFrame = {
-    val mh = bundles
-      .select(col("bundleUUID"), col("timestamp"),
-        explode(col("MessageHeader")).as("mh"))
-      .select(col("bundleUUID"), col("timestamp"),
-        col("mh.eventCoding.code").as("event_code"))
-    val p = bundles
-      .select(col("bundleUUID"), explode(col("Patient")).as("p"))
+    * per-bundle pairing, no join — each bundle row's MessageHeaders are
+    * exploded, then its Patients, so every header pairs with every patient
+    * of its own bundle: the pairs of the reference's join on bundleUUID,
+    * which is minted once per bundle row. Each bundle is parsed once and
+    * the only exchange is the final sort's. Then identifier extracts,
+    * event-code decode, latest-first ordering. */
+  def adtPatientEvents(bundles: DataFrame): DataFrame =
+    bundles
+      // outer explodes and a filter on the element positions keep exactly
+      // explode's rows: an inner explode lets the optimizer infer a
+      // non-empty-array filter and push it below the bundle parse, which
+      // would parse every bundle of an unpersisted frame a second time
+      .select(col("timestamp"), col("Patient"),
+        posexplode_outer(col("MessageHeader")).as(Seq("mh_pos", "mh")))
+      .select(col("timestamp"), col("mh_pos"),
+        col("mh.eventCoding.code").as("event_code"),
+        posexplode_outer(col("Patient")).as(Seq("p_pos", "p")))
+      .filter(col("mh_pos").isNotNull && col("p_pos").isNotNull)
+      .withColumn("action", AdtActions.getActionColumn(col("event_code")))
       .select(
-        col("bundleUUID"),
         identifierBySystem(col("p.identifier"), SsnSystem).as("ssn"),
         identifierByTypeCode(col("p.identifier"), "DL").as("drivers_license"),
         identifierByTypeText(col("p.identifier"), "EMPI").as("empi_id"),
         get(get(col("p.name"), lit(0)).getField("given"), lit(0))
           .as("first_name"),
-        get(col("p.name"), lit(0)).getField("family").as("last_name"))
-    mh.join(p, "bundleUUID")
-      .withColumn("action", AdtActions.getActionColumn(col("event_code")))
-      .select(col("ssn"), col("drivers_license"), col("empi_id"),
-        col("first_name"), col("last_name"), col("event_code"),
+        get(col("p.name"), lit(0)).getField("family").as("last_name"),
+        col("event_code"),
         col("action.action").as("action"),
         col("action.description").as("action_description"),
         col("timestamp"))
       .orderBy(col("ssn").desc, col("timestamp").desc)
-  }
 }

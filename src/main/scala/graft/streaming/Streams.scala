@@ -1355,10 +1355,13 @@ object Streams {
       .start()
   }
 
-  /** Default key-space partition count for [[upsertSink]] state. Fixed at
-    * state creation (the first committed merge) and read back from the
-    * manifest thereafter; size it so one partition's state fits one task
-    * comfortably (at 100 TB of state that means thousands, not 32). */
+  /** Default key-space partition (bucket) count for [[upsertSink]] state.
+    * Fixed at state creation (the first committed merge) and read back
+    * from the manifest thereafter. It bounds a merge's parallelism, not its
+    * task count: a merge packs whole buckets into tasks, as many tasks as
+    * its bytes need and at most one per touched bucket. Size it so one
+    * bucket's state fits one task comfortably (at 100 TB of state that
+    * means thousands, not 32). */
   val UpsertDefaultPartitions = 32
 
   /** The lakehouse MERGE recipe as a foreachBatch sink on plain parquet:
@@ -1379,12 +1382,18 @@ object Streams {
     *
     * Scale shape: per-batch cost is one shuffle over (touched state ∪
     * batch) — the table-format MERGE file-group model on plain parquet.
-    * A batch updating 1 of P buckets rewrites 1/P of the state, not all
-    * of it; UpsertCompactionSpec pins that cost curve. Version dirs are
-    * pruned at bucket granularity via the manifests (a dir survives
-    * while ANY bucket still points at it); [[compactUpsertState]] folds
-    * the live buckets into a single fresh version when file counts or
-    * stale-dir amplification drift. */
+    * That shuffle moves whole buckets into tasks: the task count follows
+    * the merge's bytes (one task per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`), capped at the
+    * touched bucket count, so a small batch is written by one task and
+    * every touched bucket still gets exactly one file. The batch's schema
+    * is the state's schema: touched buckets are read with it, no footer
+    * inference. A batch updating 1 of P buckets rewrites 1/P of the
+    * state, not all of it; UpsertCompactionSpec pins that cost curve.
+    * Version dirs are pruned at bucket granularity via the manifests (a
+    * dir survives while ANY bucket still points at it);
+    * [[compactUpsertState]] folds the live buckets into a single fresh
+    * version when file counts or stale-dir amplification drift. */
   def upsertSink(
       stream: DataFrame, stateDir: String, keyCols: Seq[String],
       versionCol: String, checkpoint: String,
@@ -1405,7 +1414,14 @@ object Streams {
     * incremental loads into the same state directory. Reads ONLY the
     * buckets the batch touches (every batch key hashes into one of
     * them, so per-key max-version dedup never needs the others), writes
-    * only those buckets into the next version, and commits by manifest. */
+    * only those buckets into the next version, and commits by manifest.
+    *
+    * The batch's schema is the state's schema (every merge writes the
+    * batch columns by name), so the touched buckets are read with it.
+    * One hash exchange on the bucket column serves both the per-key
+    * ranking (a window partitioned by bucket + keys) and the write; it
+    * moves whole buckets into [[upsertMergeTasks]] tasks, so each touched
+    * bucket gets exactly one file in the new version. */
   def upsertBatch(
       batch: DataFrame, stateDir: String, keyCols: Seq[String],
       versionCol: String,
@@ -1432,19 +1448,25 @@ object Streams {
     }.getOrElse(Nil)
     val merged =
       if (oldTouched.isEmpty) batch
-      else spark.read.parquet(oldTouched: _*)
+      else spark.read.schema(batch.schema).parquet(oldTouched: _*)
         .select(batchCols.map(col): _*).unionByName(batch)
+    val tasks = upsertMergeTasks(
+      merged.queryExecution.optimizedPlan.stats.sizeInBytes,
+      spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      touched.length)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
+      .partitionBy((col("__graft_p") +: keyCols.map(col)): _*)
       .orderBy(col(versionCol).desc)
     val next = prev.map(_.id + 1).getOrElse(0)
     merged
+      .withColumn("__graft_p", pCol)
+      // whole buckets per task: the window's clustering (bucket + keys)
+      // is satisfied by this exchange, so it is the merge's only one
+      .repartition(tasks, col("__graft_p"))
       .withColumn("__graft_rn", row_number().over(w))
       .filter(col("__graft_rn") === 1)
       .drop("__graft_rn")
-      .withColumn("__graft_p", pCol)
-      // one task per touched bucket: bounded file counts per version
-      .repartition(touched.length, col("__graft_p"))
       .write.mode("overwrite")
       .partitionBy("__graft_p")
       .parquet(f"$stateDir/v$next%05d")
@@ -1452,6 +1474,17 @@ object Streams {
     writeUpsertManifest(spark, stateDir, UpsertManifest(next, p,
       prev.map(_.parts).getOrElse(Map.empty) ++ touched.map(_ -> next)))
     pruneUpsertState(spark, stateDir)
+  }
+
+  /** Task count of one [[upsertBatch]] merge: one task per advisory
+    * partition size of the merged bytes, at least one and at most one per
+    * touched bucket. Unknown plan sizes are reported as huge, which gives
+    * one task per touched bucket. */
+  private[graft] def upsertMergeTasks(
+      sizeInBytes: BigInt, advisoryBytes: Long, touchedBuckets: Int): Int = {
+    val perTask = BigInt(math.max(1L, advisoryBytes))
+    val need = (sizeInBytes + perTask - 1) / perTask
+    need.max(BigInt(1)).min(BigInt(touchedBuckets)).toInt
   }
 
   /** Maintenance step for [[upsertSink]]'s state: rewrite ALL live
