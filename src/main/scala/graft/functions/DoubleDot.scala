@@ -327,6 +327,27 @@ object GraftFunctions {
     call_function("graft_minhash_row", hashes)
   }
 
+  /** `pmod(xxhash64(t), HashPrime)` of each element of a shingle array,
+    * as one codegen'd call (see [[ShingleHashes]]): the input
+    * [[minHashRow]] takes. */
+  def shingleHashes(shingles: Column): Column =
+    nativeColumn(ShingleHashes(columnExpr(shingles), HashPrime))
+
+  /** Ids of the `count` centroids with the largest dot product against
+    * `v`, best first, ties to the lower id (see [[TopCentroids]]). */
+  def topCentroids(
+      v: Column, centroids: Array[Array[Double]], count: Int): Column =
+    nativeColumn(TopCentroids(columnExpr(v), centroids, count))
+
+  /** How many single-space tokens of `text` are in `words` (see
+    * [[TokenSetCount]]); a null text counts as `size` counts a null. */
+  def tokenSetCount(text: Column, words: Seq[String]): Column =
+    nativeColumn(TokenSetCount(columnExpr(text), words,
+      org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull))
+
+  private def nativeColumn(e: Expression): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(e)
+
   /** Misra–Gries frequent-items summary aggregate (see
     * [[FrequentItemsSketch]]): array<struct<item,cnt>> of at most
     * `capacity` undercount estimates, heaviest first. */

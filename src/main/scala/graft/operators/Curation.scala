@@ -27,6 +27,15 @@ import graft.operators.TextAnalysis._
   *    repetition statistic and drop at stage 1 — unscoreable is treated
   *    as unsafe. Pre-filter them around the pipeline if they should
   *    survive.
+  *  - `id` must be unique. Every verdict set names documents by id, so
+  *    documents sharing one share every verdict, and the id joins of the
+  *    optional span cut and LM screen would multiply their rows. The
+  *    pipeline does not check this: a check would cost a job per run.
+  *
+  * The near-duplicate losers and the contaminated ids are not made
+  * distinct: each set only feeds a left-anti join, which keeps the same
+  * rows however many times an id repeats on its right side, while a
+  * `distinct` would add an aggregate, an exchange and a job.
   *
   * Observability: per-stage survivor counts ride as
   * [[org.apache.spark.sql.Observation]] metrics — accumulator-backed,
@@ -248,9 +257,10 @@ object Curation {
     val repKeep = udf { (t: String) =>
       TextAnalysis.repetitionJudgment(t, repDropAt).exists(_._3)
     }
+    // no distinct on either id set: both only feed left-anti joins
     val losers = Dedup
       .minHashLshPairs(docs0, id, text, cfg.nearDupThreshold)
-      .select(col("doc_b").as(id)).distinct()
+      .select(col("doc_b").as(id))
     // contaminated ids, decided on the FULL corpus like every verdict set
     val contaminated = probes.map { p =>
       // one frame, probes tagged by a column: reuses the single-operator
@@ -261,7 +271,7 @@ object Curation {
       Decontaminate.contamination(tagged, id, text,
           probePred = col("__probe"), cfg.decontamMinContainment,
           n = cfg.decontamNgram)
-        .select(col("doc_id").as(id)).distinct()
+        .select(col("doc_id").as(id))
     }
     val oRep = Observation()
     val oDedup = Observation()

@@ -218,10 +218,9 @@ object Dedup {
     * ONE banding definition shared by the aggregate (batch) and row-level
     * (streaming) signature paths, so both land in identical buckets. */
   private[graft] def bandStructs(sig: Column): Column =
-    array((0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(sig, b * RowsPerBand + 1, RowsPerBand)).as("bh"))
-    }: _*)
+    org.apache.spark.sql.graft.ColumnBridge.column(graft.functions.LshBands(
+      org.apache.spark.sql.graft.ColumnBridge.expression(sig),
+      Bands, RowsPerBand))
 
   /** Exact Jaccard of two distinct-shingle-set columns — one arithmetic
     * path shared by batch pair verification and the streaming candidate
@@ -245,16 +244,20 @@ object Dedup {
     * cross-corpus, and (as the static index) streaming incremental pair
     * paths. */
   private[graft] def bandedBuckets(
-      docs: DataFrame, id: String, text: String): DataFrame = {
-    val prime = graft.functions.GraftFunctions.HashPrime
+      docs: DataFrame, id: String, text: String): DataFrame =
     fanOut(docs)
       .select(col(id).as("doc_id"),
-        graft.functions.GraftFunctions.minHashRow(
-          transform(wordTrigrams(col(text)),
-            t => pmod(xxhash64(t), lit(prime)))).as("sig"))
+        shingleSignature(wordTrigrams(col(text))).as("sig"))
       .select(col("doc_id"), explode(bandStructs(col("sig"))).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-  }
+
+  /** Row-level MinHash signature of a distinct-shingle-set column: each
+    * shingle's `pmod(xxhash64(t), HashPrime)` into
+    * [[graft.functions.MinHashRow]], both as codegen'd expressions so the
+    * projection stays inside its whole-stage pipeline. */
+  private[graft] def shingleSignature(shingles: Column): Column =
+    graft.functions.GraftFunctions.minHashRow(
+      graft.functions.GraftFunctions.shingleHashes(shingles))
 
   /** Near-dup pairs via MinHash+LSH candidates, exact-verified by shingle
     * intersection. Output matches the exact all-pairs result (same doc_a,

@@ -36,7 +36,15 @@ object Similarity {
     * through a single task. */
   def normed(emb: DataFrame, id: String, vec: String): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val v = transform(col(vec), x => x.cast("double"))
+    // a cast, not transform(vec, x -> double(x)): a lambda would keep the
+    // projection out of whole-stage codegen. The element nullability of
+    // the input carries over, so `v` keeps the type the lambda gave it.
+    val containsNull = emb.select(col(vec)).schema.head.dataType match {
+      case org.apache.spark.sql.types.ArrayType(_, n) => n
+      case _ => true
+    }
+    val v = col(vec).cast(org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.DoubleType, containsNull))
     emb
       .repartition(emb.sparkSession.sparkContext.defaultParallelism)
       .select(col(id).as("vec_id"), v.as("v"))
@@ -938,14 +946,11 @@ object Similarity {
   final case class IvfIndex(
       corpus: DataFrame, lists: DataFrame, centroids: Array[Array[Double]])
 
-  // sort_array desc on (cs, nl) structs: cs desc, then nl desc = list asc
+  // the `count` best lists by dot product, ties to the lower list id
   private def topLists(
       cents: Array[Array[Double]], count: Int,
       v: Column = col("v")): Column =
-    transform(
-      slice(sort_array(array(listScores(v, cents): _*), asc = false),
-        1, count),
-      s => (s.getField("nl") * lit(-1)).cast("int"))
+    graft.functions.GraftFunctions.topCentroids(v, cents, count)
 
   /** (vec_id, v, nrm, list_id) soft-assigned inverted-list rows: each
     * corpus vector lives in its [[IvfAssign]] nearest lists (2× index

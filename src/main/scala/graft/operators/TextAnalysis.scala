@@ -158,8 +158,12 @@ object TextAnalysis {
   def regexTokenCount(text: Column): Column =
     regexp_count(text, lit(wordRegex)).cast("long")
 
+  /** `size(filter(tokens(text), w -> w IN stopwords))` as one native
+    * byte scan per row ([[graft.functions.TokenSetCount]]). Not a `filter`
+    * lambda: a lambda keeps its plan node out of whole-stage codegen, and
+    * the language-ID and quality screens call this five times per row. */
   def stopwordCount(text: Column, stopwords: Seq[String]): Column =
-    size(filter(tokens(text), w => w.isInCollection(stopwords))).cast("long")
+    graft.functions.GraftFunctions.tokenSetCount(text, stopwords)
 
   val EnglishStopwords = Seq("the", "a", "of", "and", "to")
 

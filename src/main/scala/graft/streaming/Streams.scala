@@ -352,7 +352,6 @@ object Streams {
     graft.functions.GraftFunctions.register(incoming.sparkSession)
     val baseIdx = index.buckets
     val baseSets = index.sets
-    val prime = graft.functions.GraftFunctions.HashPrime
     val src = watermark.fold(incoming) { case (c, d) =>
       incoming.withWatermark(c, d)
     }
@@ -362,8 +361,7 @@ object Streams {
     val newBuckets = src
       .select(Seq(col(id).as("new_id"),
         Dedup.wordTrigrams(col(text)).as("__tga")) ++ tsCols: _*)
-      .withColumn("__sig", graft.functions.GraftFunctions.minHashRow(
-        transform(col("__tga"), t => pmod(xxhash64(t), lit(prime)))))
+      .withColumn("__sig", Dedup.shingleSignature(col("__tga")))
       .select(Seq(col("new_id"), col("__tga"),
         explode(Dedup.bandStructs(col("__sig"))).as("bk")) ++ tsCols: _*)
       .select(Seq(col("new_id"), col("__tga"),
