@@ -28,22 +28,42 @@ import graft.operators.TextAnalysis._
   *    as unsafe. Pre-filter them around the pipeline if they should
   *    survive.
   *  - `id` must be unique. Every verdict set names documents by id, so
-  *    documents sharing one share every verdict, and the id joins of the
-  *    optional span cut and LM screen would multiply their rows. The
-  *    pipeline does not check this: a check would cost a job per run.
+  *    documents sharing one share every verdict, and the id join of the
+  *    optional span cut would multiply their rows. The pipeline does not
+  *    check this: a check would cost a job per run.
   *
-  * The near-duplicate losers and the contaminated ids are not made
-  * distinct: each set only feeds a left-anti join, which keeps the same
-  * rows however many times an id repeats on its right side, while a
-  * `distinct` would add an aggregate, an exchange and a job.
+  * Verdicts are flags, not filters. Every document gets one flag column
+  * per screen: repetition (a null id fails it), near-dup loser,
+  * contaminated, and the final screens (LM, Gopher, NB, quality,
+  * language), and one filter after the observation below applies them
+  * all. Spark pushes no filter through an observation, so the
+  * repetition screen is not pushed below the joins, where it would run
+  * in a generated stage of its own before the shuffle (and shift the
+  * near-dup sub-plan's codegen stage ids away from those the standalone
+  * [[Dedup.minHashLshPairs]] compiles).
   *
-  * Observability: per-stage survivor counts ride as
-  * [[org.apache.spark.sql.Observation]] metrics — accumulator-backed,
-  * collected DURING the one pass that computes the result. Nothing about
-  * the plan changes and no extra jobs run; after any action on the
-  * returned frame, `result.stageRows` yields the funnel. At 100 TB the
+  * The near-dup losers, the contaminated ids and the LM keepers are each
+  * tested with `id IN (set)`, which Spark plans as an existence join: it
+  * adds one boolean column and keeps the left side one-to-one however
+  * often an id repeats on the right. The column is false, not null, for
+  * an id the set lacks even when the set holds a null (a contaminated
+  * document with no id), so such a null drops no other row, as under
+  * the left-anti join (CurationFunnelSpec). Filtering on the flag then
+  * keeps the rows a left-anti join (losers, contaminated) or a left-semi
+  * join (LM keepers) keeps, so none of these sets is made distinct,
+  * which would add an aggregate, an exchange and a job.
+  *
+  * Observability: the funnel rides as ONE
+  * [[org.apache.spark.sql.Observation]] over the flagged frame, just
+  * before the one filter that applies every flag. Its four metrics are
+  * `count_if` of the flag prefixes (rows after repetition, after
+  * near-dup removal, after decontamination, after the final screens),
+  * accumulator-backed and collected DURING the one pass that computes
+  * the result: no extra job runs. After any action on the returned
+  * frame, `result.stageRows` yields the funnel. At 100 TB the
   * alternative (a count() per stage) would re-run the upstream pipeline
-  * once per stage.
+  * once per stage. An observation sits outside whole-stage codegen and
+  * splits its stage, so the pipeline has one, not one per stage.
   */
 object Curation {
 
@@ -151,24 +171,21 @@ object Curation {
   }
 
   /** Curated corpus + the stage funnel. `df` has columns
-    * (id, pred_lang, quality, split, clean_text); observations resolve
+    * (id, pred_lang, quality, split, clean_text); the funnel resolves
     * after the first action on `df`. The decontamination stage count
     * equals the dedup count when the pipeline ran without probes. */
-  final case class Result(
-      df: DataFrame,
-      afterRepetition: Observation,
-      afterDedup: Observation,
-      afterDecontam: Observation,
-      afterFilters: Observation) {
+  final case class Result(df: DataFrame, funnel: Observation) {
     /** Rows surviving each stage, in order. Call after an action. */
-    def stageRows: Seq[(String, Long)] = Seq(
-      "repetition_screen" -> metric(afterRepetition),
-      "near_dup_removal" -> metric(afterDedup),
-      "decontamination" -> metric(afterDecontam),
-      "quality_lang_filters" -> metric(afterFilters))
-    private def metric(o: Observation): Long =
-      o.get("rows").asInstanceOf[Long]
+    def stageRows: Seq[(String, Long)] = {
+      val m = funnel.get
+      Stages.map(s => s -> m(s).asInstanceOf[Long])
+    }
   }
+
+  /** The funnel's stage names, in order; each is a metric of
+    * [[Result.funnel]]. */
+  val Stages: Seq[String] = Seq("repetition_screen", "near_dup_removal",
+    "decontamination", "quality_lang_filters")
 
   /** @param probes benchmark/eval suite to decontaminate against: any
     *        document whose shingles contain a probe document at ≥
@@ -246,7 +263,7 @@ object Curation {
         }
       else defined
     // repetition screen INLINE (r22, guide §6 read amplification): the
-    // statistic is per-document, so judging it as a filter in the emit
+    // statistic is per-document, so judging it as a flag in the emit
     // chain removes one full corpus pass + an id join — at 100 TB one
     // fewer corpus read per pipeline run. Same kernel as
     // [[TextAnalysis.repetitionScreen]] (whose standalone certification
@@ -257,7 +274,7 @@ object Curation {
     val repKeep = udf { (t: String) =>
       TextAnalysis.repetitionJudgment(t, repDropAt).exists(_._3)
     }
-    // no distinct on either id set: both only feed left-anti joins
+    // no distinct on any id set: each only feeds an existence join
     val losers = Dedup
       .minHashLshPairs(docs0, id, text, cfg.nearDupThreshold)
       .select(col("doc_b").as(id))
@@ -273,10 +290,12 @@ object Curation {
           n = cfg.decontamNgram)
         .select(col("doc_id").as(id))
     }
-    val oRep = Observation()
-    val oDedup = Observation()
-    val oDecontam = Observation()
-    val oFinal = Observation()
+    // LM screen (optional): scored on the FULL corpus like every verdict
+    // set; fluent ids keep their row, unscoreable ones drop
+    val lmKeep = cfg.lmXentMax.map { cap =>
+      lmScore(docs0, id, text, minCount = 2)
+        .filter(col("xent") <= cap).select(col(id))
+    }
     // span cut (optional): computed on the FULL corpus — duplicated-span
     // verdicts, like dedup losers, must not depend on screen thresholds
     val withEmitText = cfg.spanCutMinDocs match {
@@ -286,44 +305,47 @@ object Curation {
         docs0.join(cut, Seq(id))
       case None => docs0.withColumn("__emit", col(text))
     }
-    // the null-id guard preserves the former join-on-id semantics
-    // exactly: a null id never matched the keep-id set, so it never
-    // survived this stage
-    val afterDedupDf = withEmitText
-      .filter(col(id).isNotNull && repKeep(col(text)))
-      .observe(oRep, count(lit(1)).as("rows"))
-      .join(losers, Seq(id), "left_anti")
-      .observe(oDedup, count(lit(1)).as("rows"))
-    val afterDecontamDf = contaminated
-      .fold(afterDedupDf)(c => afterDedupDf.join(c, Seq(id), "left_anti"))
-      .observe(oDecontam, count(lit(1)).as("rows"))
-    // LM screen (optional): scored on the FULL corpus like every verdict
-    // set; fluent ids survive the inner join, unscoreable ones drop
-    val lmKeep = cfg.lmXentMax.map { cap =>
-      lmScore(docs0, id, text, minCount = 2)
-        .filter(col("xent") <= cap).select(col(id))
-    }
-    val out = lmKeep.fold(afterDecontamDf)(k => afterDecontamDf.join(k, Seq(id)))
-      // Gopher rules (optional): judged on the ORIGINAL text like every
-      // screen — a pure Column conjunction, no extra pass or shuffle;
-      // the token array materializes once (lambda-CSE trap)
-      .withColumn("__gt", tokens(col(text)))
-      .filter(if (cfg.gopherScreen)
-        gopherVerdictFrom(col(text), col("__gt")) === lit("keep")
-      else lit(true))
-      // trained-NB screen on the ORIGINAL text, same stage as the other
-      // pure-Column screens (no extra pass; the fold fuses into the scan)
-      .filter(cfg.nbScreen.fold(lit(true)) { case (m, thr) =>
-        m.score(col(text)) >= thr
-      })
-      .select(col(id),
+    val rep = col("__rep")
+    val dedup = rep && !col("__near")
+    val clean = dedup && !col("__cont")
+    val funnel = Observation()
+    val out = withEmitText
+      .select(Seq(col(id), col(text), col("__emit"),
+        // the repetition screen is a flag too: as a filter, Spark would
+        // push it below the joins into a stage of its own. The null-id
+        // guard preserves the former join-on-id semantics exactly: a
+        // null id never matched the keep-id set, so it never survived
+        (col(id).isNotNull && repKeep(col(text))).as("__rep"),
+        col(id).isin(losers).as("__near"),
+        contaminated.fold(lit(false))(col(id).isin(_)).as("__cont"),
+        lmKeep.fold(lit(true))(col(id).isin(_)).as("__lm"),
         langId(col(text)).as("pred_lang"),
-        qualityScore(col(text)).as("quality"),
+        qualityScore(col(text)).as("quality")) ++
+        // Gopher rules read the token array several times: materialize
+        // it once as a column (lambda-CSE trap)
+        (if (cfg.gopherScreen) Seq(tokens(col(text)).as("__gt"))
+        else Nil): _*)
+      // final screens, all judged on the ORIGINAL text: Gopher rules and
+      // the trained NB score are pure Column folds in the same stage
+      .withColumn("__final", col("__lm")
+        && (if (cfg.gopherScreen)
+          gopherVerdictFrom(col(text), col("__gt")) === lit("keep")
+        else lit(true))
+        && cfg.nbScreen.fold(lit(true)) { case (m, thr) =>
+          m.score(col(text)) >= thr
+        }
+        && col("quality") >= cfg.minQuality
+        && col("pred_lang") === cfg.lang)
+      .observe(funnel,
+        count_if(rep).as(Stages(0)),
+        count_if(dedup).as(Stages(1)),
+        count_if(clean).as(Stages(2)),
+        count_if(clean && col("__final")).as(Stages(3)))
+      // above the observation, which no filter is pushed through
+      .filter(clean && col("__final"))
+      .select(col(id), col("pred_lang"), col("quality"),
         deterministicSplit(col(id)).as("split"),
         redact(col("__emit")).as("clean_text"))
-      .filter(col("quality") >= cfg.minQuality
-        && col("pred_lang") === cfg.lang)
-      .observe(oFinal, count(lit(1)).as("rows"))
-    Result(out, oRep, oDedup, oDecontam, oFinal)
+    Result(out, funnel)
   }
 }

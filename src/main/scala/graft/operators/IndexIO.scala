@@ -8,22 +8,28 @@ import org.apache.spark.sql.types._
   * ([[Similarity.LshIndex]]/[[Similarity.IvfIndex]]/[[Similarity.PqIndex]]/
   * [[Similarity.IvfPqIndex]]) and the streaming near-dup base index.
   *
-  * Layout: one directory per index —
+  * Layout (version 2): one directory per index —
   * {{{
   * dir/
   *   _graft_index.json   tiny sidecar: kind + integer params (version, dim…)
   *   corpus/             the distributed frames, plain parquet
   *   buckets|lists|codes/
-  *   centroids/          model arrays as (i, j?, v) parquet rows — doubles
-  *   codebooks/          round-trip bit-exactly (no decimal formatting)
+  *   centroids           model arrays, one small binary file each:
+  *   codebooks           header + little-endian IEEE doubles, bit-exact
   * }}}
   *
   * The distributed frames are written as ordinary parquet (at 100 TB these
   * are object-store writes sized by the frame's own partitioning — no
-  * coalesce); the model artifacts (IVF centroids ≤ 64×dim doubles, PQ
-  * codebooks ≤ 8×256×sub) are driver-side arrays persisted as tiny parquet
-  * tables so the doubles survive save→load bit-for-bit. All paths go
-  * through Hadoop's FileSystem API, so `dir` may be local, HDFS, or s3a://.
+  * coalesce). The model artifacts (IVF centroids ≤ 64×dim doubles, PQ
+  * codebooks ≤ 8×256×sub) are driver-side arrays, so the driver writes and
+  * reads them itself through the FileSystem, like the sidecar: no Spark
+  * job, no query plan, no generated code. See [[saveMatrix]] for the file
+  * format. All paths go through Hadoop's FileSystem API, so `dir` may be
+  * local, HDFS, or s3a://.
+  *
+  * Version 1 stored the model arrays as parquet tables of (i, j?, v) rows.
+  * This build refuses a version-1 directory with a message that names
+  * both versions ([[readMeta]]); rebuild and re-save such an index.
   *
   * Load rebuilds an index whose query results are BIT-IDENTICAL to the
   * in-session original: every top-k path breaks ties deterministically
@@ -31,8 +37,9 @@ import org.apache.spark.sql.types._
   */
 object IndexIO {
 
-  /** Bump when the on-disk layout changes incompatibly. */
-  val Version = 1
+  /** Bump when the on-disk layout changes incompatibly. 2: model arrays
+    * are binary files written on the driver (1: parquet tables). */
+  val Version = 2
 
   private def fs(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -85,56 +92,120 @@ object IndexIO {
     val params = """"([a-z_]+)":(-?\d+)""".r.findAllMatchIn(json)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
     val v = params.getOrElse("version", -1L)
-    require(v == Version, s"index version $v at $dir; this build reads $Version")
+    require(v == Version,
+      s"index at $dir has layout version $v; this build reads only " +
+        s"version $Version (model arrays as binary files since version " +
+        "2): rebuild the index and save it again")
     params
   }
 
-  private val matrixSchema = StructType(Seq(
-    StructField("i", IntegerType, nullable = false),
-    StructField("v", ArrayType(DoubleType, containsNull = false),
-      nullable = false)))
+  /** Magic bytes that open every model-array file. */
+  private val ArrayMagic = "GRAFTF64".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Persist a driver-side double matrix (row index, row) as parquet. */
+  /** Persist a driver-side double matrix (rows may differ in length) as
+    * one binary file at `path`, written on the driver. Format, all
+    * integers and doubles little-endian:
+    * {{{
+    * "GRAFTF64"  rank:int32  then the nested array
+    * array of rank 1 = n:int32, n doubles (IEEE 754 raw bits)
+    * array of rank r = n:int32, n arrays of rank r − 1
+    * }}}
+    * Raw bits make the round trip bit-exact for every value, NaN payloads,
+    * −0.0 and subnormals included. An existing file or directory at
+    * `path` is replaced. */
   private[graft] def saveMatrix(
-      spark: SparkSession, dir: String, m: Array[Array[Double]]): Unit = {
-    val rows = m.zipWithIndex.map { case (r, i) => Row(i, r.toSeq) }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), matrixSchema)
-      .write.mode("overwrite").parquet(dir)
-  }
+      spark: SparkSession, path: String, m: Array[Array[Double]]): Unit =
+    writeArrays(spark, path, 2, m.length, i => writeRow(_, m(i)),
+      8 + m.map(r => 4 + 8 * r.length).sum)
 
   private[graft] def loadMatrix(
-      spark: SparkSession, dir: String): Array[Array[Double]] =
-    spark.read.parquet(dir).collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-
-  private val tensorSchema = StructType(Seq(
-    StructField("i", IntegerType, nullable = false),
-    StructField("j", IntegerType, nullable = false),
-    StructField("v", ArrayType(DoubleType, containsNull = false),
-      nullable = false)))
-
-  /** Persist a driver-side rank-3 double tensor (PQ codebooks:
-    * subspace, code, codeword) as parquet. */
-  private[graft] def saveTensor(
-      spark: SparkSession, dir: String,
-      t: Array[Array[Array[Double]]]): Unit = {
-    val rows = for {
-      (mat, i) <- t.zipWithIndex
-      (r, j) <- mat.zipWithIndex
-    } yield Row(i, j, r.toSeq)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), tensorSchema)
-      .write.mode("overwrite").parquet(dir)
+      spark: SparkSession, path: String): Array[Array[Double]] = {
+    val b = readArrays(spark, path, 2)
+    val m = Array.fill(length(b, 4, path))(readRow(b, path))
+    requireConsumed(b, path)
+    m
   }
 
+  /** Persist a driver-side rank-3 double tensor (PQ codebooks: subspace,
+    * code, codeword) in [[saveMatrix]]'s format with rank 3. */
+  private[graft] def saveTensor(
+      spark: SparkSession, path: String,
+      t: Array[Array[Array[Double]]]): Unit =
+    writeArrays(spark, path, 3, t.length, i => { b =>
+        b.putInt(t(i).length)
+        t(i).foreach(writeRow(b, _))
+      },
+      8 + t.map(m => 4 + m.map(r => 4 + 8 * r.length).sum).sum)
+
   private[graft] def loadTensor(
-      spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(dir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
+      spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
+    val b = readArrays(spark, path, 3)
+    val t = Array.fill(length(b, 4, path))(
+      Array.fill(length(b, 4, path))(readRow(b, path)))
+    requireConsumed(b, path)
+    t
+  }
+
+  private def writeRow(b: java.nio.ByteBuffer, r: Array[Double]): Unit = {
+    b.putInt(r.length)
+    r.foreach(x => b.putLong(java.lang.Double.doubleToRawLongBits(x)))
+  }
+
+  private def readRow(b: java.nio.ByteBuffer, path: String): Array[Double] =
+    Array.fill(length(b, 8, path))(
+      java.lang.Double.longBitsToDouble(b.getLong()))
+
+  /** The next array length, checked against the bytes left: each entry
+    * takes at least `entryBytes`, so a corrupt length fails here instead
+    * of allocating. */
+  private def length(b: java.nio.ByteBuffer, entryBytes: Int,
+      path: String): Int = {
+    require(b.remaining >= 4, s"$path ends inside an array header")
+    val n = b.getInt()
+    require(n >= 0 && n.toLong * entryBytes <= b.remaining,
+      s"$path holds a corrupt array length $n")
+    n
+  }
+
+  /** Header, then `n` top-level entries written by `entry(i)`; `bytes` is
+    * the body size after the magic (rank and everything below it). */
+  private def writeArrays(spark: SparkSession, path: String, rank: Int,
+      n: Int, entry: Int => java.nio.ByteBuffer => Unit,
+      bytes: Long): Unit = {
+    require(bytes + ArrayMagic.length <= Int.MaxValue,
+      s"model array for $path is $bytes bytes; the limit is ${Int.MaxValue}")
+    val b = java.nio.ByteBuffer
+      .allocate(ArrayMagic.length + bytes.toInt)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    b.put(ArrayMagic).putInt(rank).putInt(n)
+    (0 until n).foreach(entry(_)(b))
+    val (hfs, p) = fs(spark, path)
+    if (hfs.exists(p)) hfs.delete(p, true)
+    val out = hfs.create(p, true)
+    try out.write(b.array(), 0, b.position()) finally out.close()
+  }
+
+  private def readArrays(spark: SparkSession, path: String,
+      rank: Int): java.nio.ByteBuffer = {
+    val (hfs, p) = fs(spark, path)
+    require(hfs.exists(p) && hfs.getFileStatus(p).isFile,
+      s"no model array file at $path")
+    val in = hfs.open(p)
+    val bytes = try in.readAllBytes() finally in.close()
+    val b = java.nio.ByteBuffer.wrap(bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    require(bytes.length >= ArrayMagic.length + 8 &&
+        java.util.Arrays.equals(bytes.take(ArrayMagic.length), ArrayMagic),
+      s"$path is not a graft model array file")
+    b.position(ArrayMagic.length)
+    val r = b.getInt()
+    require(r == rank, s"$path holds a rank-$r array, expected rank $rank")
+    b
+  }
+
+  private def requireConsumed(b: java.nio.ByteBuffer, path: String): Unit =
+    require(!b.hasRemaining,
+      s"$path has ${b.remaining} bytes past the end of its array")
 
   private val longPairSchema = StructType(Seq(
     StructField("k", LongType, nullable = false),

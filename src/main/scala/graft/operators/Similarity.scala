@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,15 @@ object Similarity {
     * corpus across all cores first: a compact source (one parquet file →
     * one input split) would otherwise run every downstream pair loop
     * through a single task. */
-  def normed(emb: DataFrame, id: String, vec: String): DataFrame = {
+  def normed(emb: DataFrame, id: String, vec: String): DataFrame =
+    normedInPlace(
+      emb.repartition(emb.sparkSession.sparkContext.defaultParallelism),
+      id, vec)
+
+  /** [[normed]] on the input's own partitioning, for a side whose
+    * consumers broadcast or re-shuffle it anyway. */
+  private def normedInPlace(
+      emb: DataFrame, id: String, vec: String): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     // a cast, not transform(vec, x -> double(x)): a lambda would keep the
     // projection out of whole-stage codegen. The element nullability of
@@ -46,7 +54,6 @@ object Similarity {
     val v = col(vec).cast(org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.DoubleType, containsNull))
     emb
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
       .select(col(id).as("vec_id"), v.as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
   }
@@ -168,7 +175,8 @@ object Similarity {
     * partition is ever corpus-sized: the single-window shape holds one
     * query's whole scored corpus in one sort task, the
     * group-sized-partition skew `q_o2`'s two-level rank exists to avoid
-    * (and which [[ivfPqTopKJoin]] already uses for its shortlist). */
+    * (the join paths get the same bound from [[distinctTopK]]'s partial
+    * group limit). */
   private def saltedTopK(scored: DataFrame, k: Int, salts: Int,
       order: Seq[Column], score: String): DataFrame = {
     require(salts >= 1, s"bad salts: $salts")
@@ -216,6 +224,38 @@ object Similarity {
       .withColumn("rank", row_number().over(w2).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("cand_id"), col("rank"), col(score))
+  }
+
+  /** EXACT top-`k` distinct candidates per query in ONE ranked pass, over
+    * (query_id, cand_id, score) pair rows in which a pair may repeat with
+    * the same score (a candidate soft-assigned to several probed lists).
+    * A `dense_rank` gives every copy of a pair the same rank, so the
+    * filter keeps exactly the top `k` distinct pairs with all their
+    * copies, and `distinct` over the `out` columns collapses the copies
+    * without an exchange of its own (its rows are already clustered by
+    * query). `rank` equals the `row_number` the pairs would get after a
+    * dedup, because `order` ends in a key unique per candidate: two
+    * candidates never tie.
+    *
+    * Skew: Spark plans the rank with a partial `WindowGroupLimit` below
+    * its one exchange (inferred while `k` ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by default),
+    * so every map task forwards at most `k` distinct candidates per
+    * query and no task ever holds one query's whole candidate set — the
+    * protection [[dedupSaltedTopK]]'s salted first level gives, with one
+    * exchange, one window and no salt. The join paths use this form
+    * (PlanSpec pins the group limit in q_x10 and q_x13).
+    *
+    * @return `out`, one row per surviving pair; `rank` (long, 1-based)
+    *         may be among them */
+  private def distinctTopK(pairs: DataFrame, k: Int,
+      order: Seq[Column], out: String*): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(order: _*)
+    pairs
+      .withColumn("rank", dense_rank().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(out.map(col): _*)
+      .distinct()
   }
 
   /** Scalar quantizer (SQ8): one byte per DIMENSION — per-dim [min, max]
@@ -536,8 +576,9 @@ object Similarity {
     * [[graft.functions.Sq8AdcDistance]] over a packed unit query and the
     * in-place byte codes (bit-equal to the one-shot path's Column
     * formulation — its scaladoc carries the fold argument), shared-list
-    * duplicates collapse map-side (groupBy+min), and the final rank is
-    * the exact salted two-level shortlist. No re-rank stage: unlike PQ,
+    * duplicates collapse after the rank, and the final rank is the
+    * exact one-pass [[distinctTopK]] (`salts` is ignored, as in
+    * [[ivfPqTopKJoin]]). No re-rank stage: unlike PQ,
     * SQ8's exact-on-reconstruction d² IS the family's final metric, so
     * the pipeline ends at the rank (one fewer join than IVF-PQ). The
     * whole composition is deterministic → hash-certified (q_x13: every
@@ -568,7 +609,8 @@ object Similarity {
       .join(index.codedLists, Seq("list_id"))
       .select(col("q_id").as("query_id"), col("vec_id").as("cand_id"),
         sq8Adc(col("qu"), col("code")).as("d2"))
-    dedupSaltedTopK(pairs, k, salts, Seq(col("d2"), col("cand_id")), "d2")
+    distinctTopK(pairs, k, Seq(col("d2"), col("cand_id")),
+      "query_id", "cand_id", "rank", "d2")
   }
 
   /** Hyperplane-LSH layout: `Planes` sign bits per table × `LshTables`
@@ -643,6 +685,16 @@ object Similarity {
   val IvfSample = 2048
   val IvfKMeansIters = 3
 
+  /** The training sample both quantizers draw: (v, nrm, vec_id) of the
+    * `sampleN` vectors of a normed frame with the smallest
+    * xxhash64(vec_id). One query shape for both, so an IVF-PQ build
+    * compiles its plan once. */
+  private def hashSample(n: DataFrame, sampleN: Int): Array[Row] = n
+    .select(col("v"), col("nrm"), col("vec_id"))
+    .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+    .limit(sampleN)
+    .collect()
+
   /** Spherical k-means centroids from a bounded deterministic sample
     * (sketch-then-solve). The sample is the `sampleN` corpus vectors with
     * the smallest xxhash64(vec_id) — a deterministic pseudo-random draw
@@ -657,12 +709,8 @@ object Similarity {
   private[graft] def kmeansCentroids(
       n: DataFrame, lists: Int = IvfLists, iters: Int = IvfKMeansIters,
       sampleN: Int = IvfSample): Array[Array[Double]] = {
-    val sample: Array[Array[Double]] = n
-      .select(col("v"), col("vec_id"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleN)
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
+    val sample: Array[Array[Double]] =
+      hashSample(n, sampleN).map(_.getSeq[Double](0).toArray)
     require(sample.length >= lists,
       s"IVF needs at least $lists vectors; got ${sample.length}")
     val dim = sample.head.length
@@ -1213,11 +1261,7 @@ object Similarity {
       : Array[Array[Array[Double]]] = {
     require(m >= 1, s"bad subspace count: $m")
     require(k >= 1 && k <= 256, s"PQ codes are one byte: k=$k not in [1,256]")
-    val sample: Array[Array[Double]] = n
-      .select(col("v"), col("nrm"), col("vec_id"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleN)
-      .collect()
+    val sample: Array[Array[Double]] = hashSample(n, sampleN)
       .map(r => PqMath.unit(r.getSeq[Double](0).toArray, r.getDouble(1)))
     require(sample.nonEmpty, "PQ needs a non-empty corpus")
     val dim = sample.head.length
@@ -1646,7 +1690,12 @@ object Similarity {
     *  1. probe lists per query via the same [[topLists]] expression the
     *     IVF path uses (norm scales every centroid score equally, so
     *     probing with the un-normalized vector picks the same lists the
-    *     collect path picks with the unit vector);
+    *     collect path picks with the unit vector). The query side is
+    *     read on its own partitioning, not fanned out as [[normed]]
+    *     does: its only work is one score per centroid per query, and
+    *     both of its consumers (the candidate join and the re-rank join)
+    *     broadcast or re-shuffle it anyway, so a fan-out would add one
+    *     shuffle of every query vector and one generated stage;
     *  2. candidates fall out of the (list_id) EQUI-JOIN against the coded
     *     lists — the banded shape, no cross join;
     *  3. ADC distance is a codegen'd native expression over the joined
@@ -1655,14 +1704,19 @@ object Similarity {
     *     subspace/component summation order matches the LUT path, so
     *     distances are bit-equal) — the whole probe scan stays inside
     *     WholeStageCodegen, no Row materialization or per-pair boxing;
-    *  4. the shortlist is an EXACT salted two-level rank (the
-    *     [[TextAnalysis.capPerKey]] argument: each query's global
-    *     top-`k·rerank` is a subset of its per-salt top-`k·rerank`s), so
-    *     no partition ever holds one query's full candidate set — the
-    *     single-window form would put ~(probes/lists)·|corpus| rows in
-    *     one task;
+    *  4. the shortlist is the EXACT top-`k·rerank` distinct candidates
+    *     per query, ranked in one pass ([[distinctTopK]]): a partial
+    *     group limit below its one exchange bounds what each task
+    *     forwards per query, so no partition ever holds one query's full
+    *     candidate set — a plain window would put
+    *     ~(probes/lists)·|corpus| rows in one task;
     *  5. exact re-rank joins the query and corpus vectors back by key
-    *     (shuffle joins — the query side is big by assumption).
+    *     (shuffle joins — the query side is big by assumption), and one
+    *     window ranks the survivors (no exchange of its own when the
+    *     corpus side broadcasts and the rows stay clustered by query).
+    *
+    * `salts` is accepted for source compatibility and ignored since the
+    * shortlist stopped salting (any value ≥ 1 gives the same rows).
     *
     * Every exchange carries hash-width rows (ids, list ids, one double);
     * results equal the collect-path overload row-for-row (spec-pinned).
@@ -1688,7 +1742,7 @@ object Similarity {
       s"probes must be in [1, ${cents.length}]: $probes")
     val books = index.codebooks
     val shortlist = k * rerank
-    val q = normed(queries, id, vec)
+    val q = normedInPlace(queries, id, vec)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qnrm"))
     // The unit query vector is computed ONCE per query and shipped as a
@@ -1707,20 +1761,14 @@ object Similarity {
       .select(col("q_id"), packUnit(col("qv"), col("qnrm")).as("qu"),
         explode(topLists(cents, probes, col("qv"))).as("list_id"))
     // soft assignment can pair (query, vector) in ≤ IvfAssign lists with
-    // the SAME adist — dedup before ranking (groupBy+min: identical
-    // result, duplicates carry equal distances). The dedup is FUSED
-    // with the salted two-level shortlist through one (q_id, __salt)
-    // repartition — the [[dedupSaltedTopK]] shape: the unfused form
-    // paid a separate (q_id, cand_id)-keyed exchange of the whole
-    // candidate set for a ≤ IvfAssign-factor row reduction.
-    val short = dedupSaltedTopK(
+    // the SAME adist: the shortlist ranks distinct pairs
+    val short = distinctTopK(
       queryLists
         .join(index.codedLists, Seq("list_id"))
         .select(col("q_id").as("query_id"), col("vec_id").as("cand_id"),
           adc(col("qu"), col("code")).as("adist")),
-      shortlist, salts,
-      Seq(col("adist"), col("cand_id").cast("string")), "adist")
-      .select(col("query_id"), col("cand_id"))
+      shortlist, Seq(col("adist"), col("cand_id").cast("string")),
+      "query_id", "cand_id")
     val rescored = short
       .join(q.select(col("q_id").as("query_id"), col("qv"), col("qnrm")),
         Seq("query_id"))
@@ -1799,8 +1847,9 @@ object Similarity {
   // Build-daily / query-per-batch only works if the daily build SURVIVES
   // the session: save(dir)/load(dir) for each prebuilt index. Frames land
   // as plain parquet on whatever FileSystem `dir` names (local/HDFS/s3a);
-  // model arrays (centroids/codebooks) as tiny parquet tables via
-  // [[IndexIO]], so doubles round-trip bit-exactly. A loaded index answers
+  // model arrays (centroids/codebooks) as small binary files the driver
+  // writes through [[IndexIO]], so doubles round-trip bit-exactly and no
+  // Spark job runs for them. A loaded index answers
   // every query bit-identically to the freshly built one (ties in all
   // top-k paths break on ids, so parquet row order is irrelevant) —
   // pinned in AnnPersistenceSpec.

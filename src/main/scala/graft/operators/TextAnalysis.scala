@@ -1444,7 +1444,7 @@ object TextAnalysis {
   // the engine trains (LM bigram tables, NB weights, BPE merge lists),
   // on the same IndexIO layout as the ANN indexes. Longs travel through
   // dedicated long tables (64-bit hash keys must not transit doubles);
-  // doubles through binary-exact parquet. A loaded model scores
+  // doubles through IndexIO's bit-exact binary files. A loaded model scores
   // BIT-IDENTICALLY to the freshly trained one (ModelPersistenceSpec).
 
   /** Persist a trained [[LmModel]] under `dir`. */

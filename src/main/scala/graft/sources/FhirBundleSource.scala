@@ -50,8 +50,12 @@ import graft.functions.FhirBundlePivot
   * the standard reader; arbitrary user schemas can also be supplied via
   * `spark.read.format(…).schema(…)`.
   *
-  * Semantics match `entry()`: one row per file, `bundleUUID` minted at
-  * read, a malformed document keeps its row with null columns. (ref:
+  * Semantics match `entry()`: one row per file, a malformed document
+  * keeps its row with null columns. `bundleUUID` is a name-based UUID
+  * (`UUID.nameUUIDFromBytes`) of the file's path, length and
+  * modification time, so every scan of an unchanged file gives the same
+  * id: two projections of one unpersisted frame join on it, and two
+  * `collect`s agree. A file rewritten in place gets a new id. (ref:
   * read_from_directory at 01_dbignite_sample.py:20-26 — the reference's
   * reader is also a directory scan whose parse happens at `entry()`.)
   */
@@ -272,8 +276,9 @@ private[sources] class FhirReaderFactory(required: StructType,
 }
 
 /** Reads each file whole, runs the shared single-tokenization pivot with
-  * the PRUNED registry, and projects into the required schema with a
-  * minted bundleUUID. One file = one row, matching `entry()`. */
+  * the PRUNED registry, and projects into the required schema with the
+  * file's bundleUUID ([[FhirPartitionReader.bundleId]]). One file = one
+  * row, matching `entry()`. */
 private[sources] class FhirPartitionReader(
     files: Array[String], required: StructType,
     conf: SerializableHadoopConf)
@@ -304,7 +309,8 @@ private[sources] class FhirPartitionReader(
     if (i >= files.length) return false
     val p = new Path(files(i))
     val fs = p.getFileSystem(conf.value)
-    val len = fs.getFileStatus(p).getLen
+    val st = fs.getFileStatus(p)
+    val len = st.getLen
     // whole-document parse: a bundle cannot be split, and a JVM byte
     // array caps at Int.MaxValue — reject oversized files loudly instead
     // of overflowing into a negative allocation or a corrupt parse
@@ -323,7 +329,8 @@ private[sources] class FhirPartitionReader(
       val name = required.fields(c).name
       out(c) =
         if (name == "bundleUUID")
-          UTF8String.fromString(java.util.UUID.randomUUID().toString)
+          UTF8String.fromString(FhirPartitionReader.bundleId(
+            st.getPath.toString, len, st.getModificationTime))
         else if (piv == null) null // malformed document: row survives, null columns
         else if (name == "timestamp") piv.get(0, StringType)
         else piv.get(pivIndex(name), required.fields(c).dataType)
@@ -335,4 +342,15 @@ private[sources] class FhirPartitionReader(
 
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+private[sources] object FhirPartitionReader {
+
+  /** The bundle id of a file: a name-based (version 3) UUID of its
+    * qualified path, byte length and modification time. Stable across
+    * scans of an unchanged file, distinct for distinct paths. */
+  def bundleId(path: String, len: Long, modifiedMs: Long): String =
+    java.util.UUID.nameUUIDFromBytes(
+      s"$path\u0000$len\u0000$modifiedMs"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
 }

@@ -156,6 +156,67 @@ class CodegenShapeSpec extends AnyFunSuite {
     }
   }
 
+  // ------------------------------------------- nodes outside codegen
+
+  /** Every node of the executed plans, through AQE stages and reuse. */
+  private def nodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case _ => p +: (p.children.flatMap(walk) ++ p.subqueries.flatMap(walk))
+    }
+    plans.flatMap(walk)
+  }
+
+  /** How many `Window`, `WindowGroupLimit` and `CollectMetrics` nodes
+    * `plans` execute. Each runs outside whole-stage codegen and splits
+    * its stage. */
+  private def splitters(plans: Seq[SparkPlan]): Map[String, Int] = {
+    val all = nodes(plans)
+    Map(
+      "Window" -> all.count(_.isInstanceOf[
+        org.apache.spark.sql.execution.window.WindowExec]),
+      "WindowGroupLimit" -> all.count(_.isInstanceOf[
+        org.apache.spark.sql.execution.window.WindowGroupLimitExec]),
+      "CollectMetrics" -> all.count(_.isInstanceOf[
+        org.apache.spark.sql.execution.CollectMetricsExec]))
+  }
+
+  test("Curation.pipeline observes its funnel once and ranks nothing") {
+    val got = splitters(executedPlans {
+      val r = Curation.pipeline(docs, "id", "text",
+        Curation.Config(minQuality = 0.0), probes = Some(probes))
+      r.df.collect()
+      assert(r.stageRows.map(_._2).forall(_ > 0))
+    })
+    assert(got == Map("Window" -> 0, "WindowGroupLimit" -> 0,
+      "CollectMetrics" -> 1), got)
+  }
+
+  test("ivfPqTopKJoin ranks its shortlist in one pass and its survivors " +
+    "once") {
+    val index = Similarity.ivfPqIndexBuild(emb, "vec_id", "embedding")
+    val plans = executedPlans {
+      assert(Similarity.ivfPqTopKJoin(index,
+        emb.filter(col("vec_id") % 7 === 0), "vec_id", "embedding", 5)
+        .collect().nonEmpty)
+    }
+    // the shortlist's window with its partial and final group limits,
+    // and the final rank's window with its group limit
+    val got = splitters(plans)
+    assert(got == Map("Window" -> 2, "WindowGroupLimit" -> 3,
+      "CollectMetrics" -> 0), got)
+    // the query side is not fanned out: its consumers broadcast or
+    // re-shuffle it anyway
+    val roundRobin = nodes(plans).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] => e
+    }
+    assert(roundRobin.isEmpty, roundRobin.mkString("\n"))
+  }
+
   test("contamination: probe rows sharing an id pool their shingles") {
     import spark.implicits._
     // probe 900 is two rows. Their shingles count once per row in both

@@ -22,11 +22,22 @@ each pass; pass 0 is the cold pass and includes set-up. Per pass it prints:
   hit them; the first line each differs in from its nearest earlier
   source is shown.
 
-It only reads the log.
+With ``--trace .bench_build/traces/<workload>-seed<n>.json`` (the spans of
+the same run made with ``--trace 1``) it also splits each pass's
+compilations by operation: the operation spans of a pass, in order, say how
+many compilations each made (``codegen_compiles``), and the log's records
+are handed out in that order. It prints a "cache keys" line, the cold
+pass's distinct (source, driver or task) pairs, and warns when a pass's log
+count differs from the sum over its operation spans: code compiled outside
+the spans (fhir_etl and adt_feed run check queries between them) shifts the
+split of every later operation of that pass.
+
+It only reads files.
 """
 
 import argparse
 import collections
+import json
 import re
 import sys
 
@@ -109,13 +120,60 @@ def nearest(source, earlier):
     return best
 
 
+def sides_of(comps):
+    """{source: {"driver", "task"}} in first-compiled order."""
+    sources = collections.OrderedDict()
+    for thread, src in comps:
+        sources.setdefault(src, set()).add(
+            "task" if is_task_thread(thread) else "driver")
+    return sources
+
+
+def read_spans(path):
+    """{pass number: [(operation, codegen_compiles), ...]} in span order."""
+    with open(path) as f:
+        spans = json.load(f)["spans"]
+    ops = collections.defaultdict(list)
+    for s in sorted(spans, key=lambda s: (s["start_ns"], s["id"])):
+        if s["op"]:
+            ops[s["pass"]].append(
+                (s["name"], int(s["counters"].get("codegen_compiles", 0))))
+    return ops
+
+
+def report_ops(passes, ops, out):
+    """Per pass, each operation's share of the compilations in log order."""
+    cold = next((comps for number, comps in passes if number == 0), [])
+    keys = sum(len(sides) for sides in sides_of(cold).values())
+    print("cache keys (cold pass, distinct source and driver/task) %d"
+          % keys, file=out)
+    for number, comps in passes:
+        spans = ops.get(number, [])
+        total = sum(n for _, n in spans)
+        print("pass %d by operation" % number, file=out)
+        if total != len(comps):
+            print("  WARNING: the log holds %d compilations, the operation "
+                  "spans %d: the split below is shifted" % (len(comps), total),
+                  file=out)
+        at = 0
+        for name, n in spans:
+            mine = comps[at:at + n]
+            at += n
+            sources = sides_of(mine)
+            kinds = collections.Counter(kind_of(src) for _, src in mine)
+            print("  %-20s compilations %3d  keys %3d  lines %6d  %s" % (
+                name, len(mine),
+                sum(len(sides) for sides in sources.values()),
+                sum(src.count("\n") + 1 for _, src in mine),
+                ", ".join("%s %d" % (k, kinds[k]) for k in (
+                    "whole-stage", "projection", "predicate", "ordering",
+                    "other") if kinds[k])), file=out)
+
+
 def report(passes, show, out):
     seen = set()
     for number, comps in passes:
-        sources = collections.OrderedDict()
-        for thread, src in comps:
-            sources.setdefault(src, set()).add(
-                "task" if is_task_thread(thread) else "driver")
+        sources = sides_of(comps)
         both = sum(1 for sides in sources.values() if len(sides) == 2)
         kinds = collections.Counter(kind_of(src) for _, src in comps)
         by_skeleton = collections.defaultdict(set)
@@ -155,12 +213,17 @@ def main():
                          "tools/codegen-debug.log4j2.properties")
     ap.add_argument("--show", type=int, default=10,
                     help="sources listed per pass as new (default 10)")
+    ap.add_argument("--trace",
+                    help="span file of the same run (--trace 1): split each "
+                         "pass's compilations by operation")
     args = ap.parse_args()
     passes = read_passes(args.log)
     if not any(comps for _, comps in passes):
         sys.exit("no CodeGenerator DEBUG records in %s: was the run made "
                  "under tools/codegen-debug.log4j2.properties?" % args.log)
     report(passes, args.show, sys.stdout)
+    if args.trace:
+        report_ops(passes, read_spans(args.trace), sys.stdout)
 
 
 if __name__ == "__main__":
